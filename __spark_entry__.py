@@ -91,20 +91,15 @@ def _spread(df: DataFrame) -> DataFrame:
     production-sized table) the scan's own splits provide the
     parallelism and this is a no-op."""
     import os
+    from urllib.parse import urlparse
 
-    sc = df.sparkSession.sparkContext
-    want = sc.defaultParallelism
+    from med_doi_feature_extraction_spark.session import sql_sizing
+
+    want = df.sparkSession.sparkContext.defaultParallelism
+    max_split = sql_sizing(df.sparkSession)[1]
     try:
-        max_split = int(
-            df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes")
-        )
-    except Exception:
-        max_split = 128 * 1024 * 1024
-    try:
-        total = 0
-        for f in df.inputFiles():
-            p = f[7:] if f.startswith("file:") else f
-            total += os.path.getsize(p)
+        # urlparse: Hadoop renders local files as file:/x or file:///x
+        total = sum(os.path.getsize(urlparse(f).path) for f in df.inputFiles())
     except OSError:
         from med_doi_feature_extraction_spark.operators.dedup import spread_scan
 

@@ -33,6 +33,7 @@ from med_doi_feature_extraction_spark.kernels.hashing import (
     minhash_signatures,
     simhash64,
 )
+from med_doi_feature_extraction_spark.session import sql_sizing
 
 _sig_udf = F.pandas_udf(
     lambda s: minhash_signatures(s), T.ArrayType(T.LongType())
@@ -88,9 +89,7 @@ def _bucket_pairs(
     # round-robin repartition is exempt from AQE coalescing and pins
     # the expansion stage at cluster parallelism; pair-set output is
     # partitioning-insensitive (distinct + keyed downstream).
-    grouped = grouped.repartition(
-        int(bands.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    )
+    grouped = grouped.repartition(sql_sizing(bands.sparkSession)[0])
     # STREAMED two-stage expansion: posexplode each member first, then
     # explode that member's suffix slice. Per-row state stays O(B) —
     # one member plus one suffix array — so a cap-sized bucket streams
@@ -139,14 +138,22 @@ def candidate_pairs(
     return out.filter(F.col("id_a") < F.col("id_b")).distinct()
 
 
-def spread_scan(df: DataFrame, min_factor: int = 2) -> DataFrame:
+def spread_scan(df: DataFrame) -> DataFrame:
     """Ensure enough input partitions that the signature UDF fans out
     across the cluster: a small single-file parquet scan arrives as 1
-    partition and would run the Arrow kernel single-threaded. At
-    corpus scale the scan already has thousands of partitions and this
-    is a no-op (plan-time check only — no job)."""
-    n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if df.rdd.getNumPartitions() * min_factor <= n_shuffle:
+    partition and would run the Arrow kernel single-threaded.
+
+    Decided from the optimized plan's size estimate — smaller than one
+    ``maxPartitionBytes`` split per shuffle partition ⇒ round-robin
+    repartition to ``shuffle.partitions``; anything bigger already has
+    the scan splits for parallelism and is returned as-is (an
+    over-estimate, e.g. an inner join's product bound, errs toward no
+    exchange). Reading Catalyst statistics runs no job (asserted in
+    the tests); asking ``df.rdd.getNumPartitions()`` instead would,
+    under AQE, execute every upstream shuffle stage of ``df``."""
+    n_shuffle, max_split = sql_sizing(df.sparkSession)
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if size < max_split * n_shuffle:
         return df.repartition(n_shuffle)
     return df
 
@@ -510,13 +517,24 @@ def dup_clusters(
     need diameter ≳ 2^max_iterations) must not come back silently
     SPLIT — ``on_nonconverged`` controls the guard: "raise" (default)
     or "warn".
+
+    ``pairs`` is read exactly once: the distinct undirected edge list
+    is materialized up front (``localCheckpoint``), so every round's
+    checkpoint and convergence count joins two small materialized
+    relations instead of re-running whatever computed the pairs (for
+    ``minhash_dedup`` output: the signature UDF, the bucket expansion
+    and the verify joins). What is held is the edge list — two rows
+    per pair, so memory is bounded by the pair count, not the corpus.
     """
+    both_ways = F.array(
+        F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+        F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
+    )
     edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
+        pairs.select(F.explode(both_ways).alias("_e"))
+        .select("_e.src", "_e.dst")
         .distinct()
+        .localCheckpoint(eager=True)
     )
     labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
         "cluster_id", F.col("id")

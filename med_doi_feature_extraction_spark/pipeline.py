@@ -32,6 +32,7 @@ from med_doi_feature_extraction_spark.operators.windows import (
     sessionize,
     with_lag_lead,
 )
+from med_doi_feature_extraction_spark.session import sql_sizing
 
 PIPELINE_VERSION = f"page_features/{KERNEL_VERSION}"
 
@@ -224,7 +225,7 @@ def features_from_extracted(
     partitioning — running the UDF in-plan over a bucketed scan still
     costs the window exchange (measured: the in-plan bucketed variant
     is no faster than the default plan)."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n = sql_sizing(df.sparkSession)[0]
     base = df if pre_partitioned else df.repartition(n, "url")
     feats = window_stage(base, cfg)
     if dim is not None:
@@ -279,7 +280,7 @@ def page_features(
             "input — its window stack already runs without an exchange; "
             "unset one of the two"
         )
-    n = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n = sql_sizing(pages.sparkSession)[0]
     # drop the stored ground-truth text BEFORE the exchange — it
     # duplicates text_extracted byte-for-byte and would double the
     # wide shuffle's payload

@@ -17,6 +17,16 @@ from pyspark.sql import SparkSession
 ARROW_MAX_RECORDS = 2_000
 
 
+def sql_sizing(spark: SparkSession) -> tuple[int, int]:
+    """(shuffle partitions, max file-split bytes) read through Spark's
+    typed SQLConf accessors rather than ``int(conf.get(...))``: byte
+    strings such as ``"32m"`` or ``"128MB"`` are legal split sizes, and
+    a platform that accepts a non-int partition count (``'auto'``)
+    resolves it in its own accessor."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return conf.numShufflePartitions(), conf.filesMaxPartitionBytes()
+
+
 def get_spark(
     app_name: str = "med_doi_feature_extraction_spark",
     master: str | None = None,

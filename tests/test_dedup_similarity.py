@@ -385,6 +385,91 @@ def test_dup_clusters_nonconvergence_raises(spark):
     assert (out.cluster_id == 0).all()
 
 
+def test_dup_clusters_reads_pairs_once(spark):
+    """dedup_decisions evaluates its pairs input exactly once: the edge
+    list is materialized before the label-propagation rounds, so no
+    round's checkpoint or convergence count re-runs the plan that
+    produced the pairs (in curation: the minhash UDF and verify joins)."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for b in batches:
+            seen.add(len(b))
+            yield b
+
+    pdf = pd.DataFrame({"id_a": [1, 2, 3, 10, 20], "id_b": [2, 3, 4, 11, 21]})
+    pairs = spark.createDataFrame(pdf).mapInPandas(count_rows, "id_a long, id_b long")
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [1, 2, 3, 4, 10, 11, 20, 21, 99]})
+    )
+    out = dedup.dedup_decisions(docs, "doc_id", pairs).collect()
+    assert seen.value == len(pdf)
+    assert {r.doc_id: r.cluster_id for r in out} == {
+        1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 99: 99
+    }
+
+
+def _set_max_partition_bytes(spark, value):
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", value)
+    return old
+
+
+def test_spread_scan_is_plan_only(spark, tmp_path):
+    """spread_scan runs no Spark job even over a plan with an exchange
+    (a scan semi-joined to an exact_dedup keep set, as ``curate``
+    builds it): counted per job group, which also sees the AQE stage
+    runs a ``df.rdd`` call would trigger. The size rule is pinned both
+    ways around the maxPartitionBytes × shuffle.partitions threshold."""
+    sc = spark.sparkContext
+    path = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(200), "text": [f"doc {i % 150}" for i in range(200)]})
+    ).write.parquet(path)
+    df = spark.read.parquet(path)
+    keep = dedup.exact_dedup(df, "doc_id", "text").select(
+        F.col("keep_id").alias("doc_id")
+    )
+    chained = df.join(keep, "doc_id", "left_semi")
+
+    group = "test_spread_scan_is_plan_only"
+    sc.setJobGroup(group, group)
+    try:
+        dedup.spread_scan(chained)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    size = int(chained._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    old = _set_max_partition_bytes(spark, str(size // n_shuffle + 1))
+    try:
+        small = dedup.spread_scan(chained)
+        _set_max_partition_bytes(spark, str(size // n_shuffle))
+        big = dedup.spread_scan(chained)
+    finally:
+        _set_max_partition_bytes(spark, old)
+    assert small.rdd.getNumPartitions() == n_shuffle
+    assert big is chained
+    assert sorted(small.collect()) == sorted(chained.collect())
+
+
+def test_sql_sizing_reads_byte_strings(spark):
+    """maxPartitionBytes accepts Spark byte strings ("32m"); the sizing
+    helper and spread_scan parse them as Spark does, not via int()."""
+    from med_doi_feature_extraction_spark.session import sql_sizing
+
+    old = _set_max_partition_bytes(spark, "32m")
+    try:
+        n_shuffle, max_split = sql_sizing(spark)
+        spread = dedup.spread_scan(spark.range(10))
+    finally:
+        _set_max_partition_bytes(spark, old)
+    assert max_split == 32 * 1024 * 1024
+    assert n_shuffle == int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert spread.count() == 10
+
+
 def test_incremental_minhash_dedup(spark):
     """New-snapshot dedup vs an existing corpus: planted copies are
     flagged with the right provenance, unique docs survive, and no

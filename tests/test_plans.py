@@ -68,3 +68,27 @@ def test_pipeline_blob_never_shuffles(spark, pages_df, dim_df):
 def test_anti_join_is_join_not_subquery_scan(spark):
     plan = _plan(entry.q_anti_join(spark, SF))
     assert "LeftAnti" in plan
+
+
+def test_spread_resolves_both_file_uri_forms(spark, tmp_path, monkeypatch):
+    """_spread sizes its input from inputFiles(); Hadoop renders a local
+    file as file:/x or file:///x, and both must resolve to the file
+    rather than drop into the spread_scan fallback."""
+    from urllib.parse import urlparse
+
+    from med_doi_feature_extraction_spark.operators import dedup
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(10).write.parquet(path)
+    df = spark.read.parquet(path)
+    files = [urlparse(f).path for f in df.inputFiles()]
+
+    def no_fallback(_df):
+        raise AssertionError("_spread fell back to spread_scan")
+
+    monkeypatch.setattr(dedup, "spread_scan", no_fallback)
+    for form in ("file:{}", "file://{}"):
+        df.inputFiles = lambda form=form: [form.format(p) for p in files]
+        out = entry._spread(df)
+        assert out is not df  # tiny input: repartitioned by size
+        assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism

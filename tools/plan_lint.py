@@ -15,8 +15,12 @@ checks the arguable parts mechanically so the claims can't rot:
 
 Usage: ``python tools/plan_lint.py [sf_dir] [names...]`` — defaults to
 /root/testdata/sf0.01 and all queries. Exit 1 on any violation.
-Side note: building some queries materializes their oracle seams
-(parquet writes) — that's part of their contract and harmless here.
+
+Also reported, never a violation: ``build_jobs`` in the JSON line maps
+each query that launched Spark jobs while its DataFrame was being
+BUILT (before any action) to that job count. Some of those are
+contract seams (queries that write an oracle parquet at build); the
+rest are eager probes hidden in operator construction.
 """
 
 from __future__ import annotations
@@ -216,21 +220,32 @@ def main() -> None:
     from med_doi_feature_extraction_spark.session import get_spark
 
     spark = get_spark("plan_lint")
+    sc = spark.sparkContext
     qs = entry.queries()
     names = sys.argv[2:] or list(qs)
     bad: dict[str, list[str]] = {}
+    build_jobs: dict[str, int] = {}
     for name in names:
+        group = f"plan_lint.build.{name}"
+        sc.setJobGroup(group, group)
         try:
             df = qs[name](spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as exc:  # noqa: BLE001 — report, don't halt the sweep
             bad[name] = [f"build-error: {exc}"[:200]]
             continue
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            if n_jobs:
+                build_jobs[name] = n_jobs
         flags = lint_plan(name, plan)
         if flags:
             bad[name] = flags
         print(f"{name:28s} {'FLAG ' + ','.join(flags) if flags else 'ok'}")
-    print(json.dumps({"violations": bad, "checked": len(names)}))
+    print(json.dumps(
+        {"violations": bad, "checked": len(names), "build_jobs": build_jobs}
+    ))
     spark.stop()
     sys.exit(1 if bad else 0)
 
